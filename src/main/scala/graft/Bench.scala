@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.lineage.Json
 
 /** Benchmark driver: one JSON line with per-query medians.
   *
@@ -153,7 +154,7 @@ object Bench {
       s""""load_start":$loadStart,"load_end":${loadavg()},"cpus":$cpus,""" +
       s""""load_cut":$loadCut,"retime_runs":$retimeRuns}"""
     val detailLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stats":$stats,"retimed":$retimedJson,"errors":$errs,"env":$env,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stats":$stats,"retimed":$retimedJson,"errors":$errs,"env":$env,"sf":${Json.quote(sfDir)}}"""
     println(detailLine)
     // Round-over-round self-containment (r12 VERDICT item 7): the
     // driver's artifact keeps only the last ~2000 chars of stdout, which
@@ -173,7 +174,7 @@ object Bench {
     val retimedList = retimedNames.take(40).map("\"" + _ + "\"").mkString("[", ",", "]")
     println(s"""{"metric":"total","value":$total,"unit":"sec","n":${ok.size},""" +
       s""""n_retimed":${retimedNames.size},"retimed":$retimedList,""" +
-      s""""detail_file":"$detailPath","errors":$errs,"env":$env,"sf":"$sfDir"}""")
+      s""""detail_file":${Json.quote(detailPath)},"errors":$errs,"env":$env,"sf":${Json.quote(sfDir)}}""")
     spark.stop()
   }
 }

@@ -1,147 +1,122 @@
 package graft.lineage
 
-import org.apache.spark.sql.catalyst.expressions.{Attribute, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId, NamedExpression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 
-/** Column-level lineage: resolve each output attribute of an analyzed plan
-  * down to the set of source-table columns it derives from, following
-  * ExprId chains through Project/Aggregate/Window/Generate/Union/joins.
+/** Column-level lineage: map each output attribute of an analyzed plan to
+  * the set of source-table columns it derives from, following ExprId
+  * chains through Project/Aggregate/Window/Generate/Union/Expand/joins.
+  *
+  * One bottom-up pass: every plan node is visited once and yields a map
+  * from each of its output ExprIds to that column's (sources, derivation).
+  * Nodes are memoized by identity, so a subtree shared by the branches of
+  * a self-union is walked once and the cost is linear in plan size.
   */
 object ColumnLineage {
+
+  /** Source columns ("source.column") and derivation of one attribute.
+    * The derivation is the Catalyst SQL that COMPUTES the column, or None
+    * for an identity read. Rename chains (Alias over a bare attribute,
+    * `withColumnRenamed`) are transparent: `sum(x) AS a` later renamed to
+    * `b` still reports `sum(x)`. Only the OUTERMOST non-trivial expression
+    * is kept — it names the columns of the plan level it was written at,
+    * which is what a catalog consumer reads alongside the source set. */
+  private final case class Lin(sources: Set[String], derivation: Option[String])
+  private type Lins = Map[ExprId, Lin]
+  private val unknown = Lin(Set.empty, None)
 
   /** Lineage for every output column of `plan` (analyzed). */
   def forPlan(plan: LogicalPlan): Seq[ColumnMapping] = {
     val body = PlanExtractor.queryBody(plan)
+    val lins = new Pass().of(body)
     body.output.map { attr =>
-      ColumnMapping(attr.name, resolve(attr, body).toSeq.sorted,
-        derivation(attr, body))
+      val lin = lins.getOrElse(attr.exprId, unknown)
+      ColumnMapping(attr.name, lin.sources.toSeq.sorted, lin.derivation)
     }
   }
 
-  /** The derivation expression (Catalyst SQL) that COMPUTES `attr`, or
-    * None when the column is an identity read of a source column.
-    * Rename chains (Alias over a bare attribute, `withColumnRenamed`)
-    * are transparent: the walk continues below them, so `sum(x) AS a`
-    * later renamed to `b` still reports `sum(x)`. Only the OUTERMOST
-    * non-trivial expression is reported — it names the columns of the
-    * plan level it was written at, which is what a catalog consumer
-    * reads alongside the resolved source set.
-    */
-  def derivation(attr: Attribute, plan: LogicalPlan): Option[String] = plan match {
-    case leaf if leaf.children.isEmpty => None
+  private final class Pass {
+    private val memo = new java.util.IdentityHashMap[LogicalPlan, Lins]()
 
-    case p: Project => derivationNamed(attr, p.projectList, p.child)
-
-    case a: Aggregate => derivationNamed(attr, a.aggregateExpressions, a.child)
-
-    case w: Window =>
-      w.windowExpressions.find(_.toAttribute.exprId == attr.exprId) match {
-        case Some(ne) => derivationOf(ne, w.child)
-        case None     => derivation(attr, w.child)
-      }
-
-    case g: Generate =>
-      if (g.generatorOutput.exists(_.exprId == attr.exprId))
-        Some(g.generator.sql)
-      else derivation(attr, g.child)
-
-    case u: Union =>
-      // per-branch derivations may differ; report the first branch's
-      // (the UNION's output naming follows it) when any branch computes
-      val idx = u.output.indexWhere(_.exprId == attr.exprId)
-      if (idx >= 0) u.children.view.flatMap(c => derivation(c.output(idx), c)).headOption
-      else None
-
-    case other =>
-      val owning = other.children.filter(_.outputSet.contains(attr))
-      val targets = if (owning.nonEmpty) owning else other.children
-      targets.view.flatMap(c => derivation(attr, c)).headOption
-  }
-
-  private def derivationNamed(
-      attr: Attribute,
-      exprs: Seq[NamedExpression],
-      child: LogicalPlan): Option[String] =
-    exprs.find(_.toAttribute.exprId == attr.exprId) match {
-      case Some(ne) => derivationOf(ne, child)
-      case None     => derivation(attr, child)
+    def of(plan: LogicalPlan): Lins = {
+      val hit = memo.get(plan)
+      if (hit != null) hit
+      else { val lins = compute(plan); memo.put(plan, lins); lins }
     }
 
-  private def derivationOf(ne: NamedExpression, child: LogicalPlan): Option[String] =
-    ne match {
-      case a: org.apache.spark.sql.catalyst.expressions.Alias =>
-        a.child match {
-          case ar: Attribute => derivation(ar, child) // pure rename: descend
-          case computed      => Some(computed.sql)
+    private def compute(plan: LogicalPlan): Lins = plan match {
+      case leaf if leaf.children.isEmpty =>
+        val name = PlanExtractor.leafName(leaf)
+        firstById(leaf.output.map(a => a.exprId -> Lin(Set(s"$name.${a.name}"), None)))
+
+      case p: Project => named(p.projectList, of(p.child))
+
+      case a: Aggregate => named(a.aggregateExpressions, of(a.child))
+
+      case w: Window =>
+        val below = of(w.child)
+        below ++ named(w.windowExpressions, below)
+
+      case g: Generate =>
+        val below = of(g.child)
+        val gen = Lin(sources(below, g.generator.references.toSeq), Some(g.generator.sql))
+        below ++ g.generatorOutput.map(_.exprId -> gen)
+
+      case u: Union =>
+        // position by position: a branch's own attribute at the same
+        // index feeds each output; the derivation is the first branch's
+        // that computes one (the UNION's output naming follows it)
+        val branches = u.children.map(c => (c.output, of(c)))
+        firstById(u.output.zipWithIndex.map { case (attr, i) =>
+          val per = branches.map { case (out, lins) => lins.getOrElse(out(i).exprId, unknown) }
+          attr.exprId -> Lin(per.flatMap(_.sources).toSet, per.flatMap(_.derivation).headOption)
+        })
+
+      case e: Expand =>
+        // rollup/cube/grouping-sets: each output position is fed by the
+        // same position of every projection row (NULLed out in some — the
+        // union of references is the true source set)
+        val below = of(e.child)
+        firstById(e.output.zipWithIndex.map { case (attr, i) =>
+          attr.exprId -> Lin(sources(below, e.projections.flatMap(_(i).references)),
+            below.getOrElse(attr.exprId, unknown).derivation)
+        })
+
+      case other =>
+        // pass-through nodes (Filter, Join, Sort, SubqueryAlias, Limit, ...):
+        // an attribute comes from whichever children produce it
+        other.children.map(of).reduceLeft { (acc, lins) =>
+          lins.foldLeft(acc) { case (m, (id, lin)) =>
+            m.updated(id, m.get(id).fold(lin)(seen =>
+              Lin(seen.sources ++ lin.sources, seen.derivation.orElse(lin.derivation))))
+          }
         }
-      case ar: Attribute => derivation(ar, child)
-      case otherNe       => Some(otherNe.sql)
     }
 
-  /** Source columns (as "source.column") feeding `attr` within `plan`. */
-  def resolve(attr: Attribute, plan: LogicalPlan): Set[String] = plan match {
-    case leaf if leaf.children.isEmpty =>
-      if (leaf.outputSet.contains(attr))
-        Set(s"${PlanExtractor.leafName(leaf)}.${attr.name}")
-      else Set.empty
+    /** Lineage of Project/Aggregate/Window outputs: the first named
+      * expression with a given id defines it. */
+    private def named(exprs: Seq[NamedExpression], below: Lins): Lins =
+      firstById(exprs.map { ne =>
+        // a column computed FROM a subquery (SELECT (SELECT max(x) FROM t))
+        // derives from the subquery plan's own sources
+        val fromSubqueries = ne.collect { case s: SubqueryExpression =>
+          sources(of(s.plan), s.plan.output)
+        }.flatten
+        val derivation = ne match {
+          case Alias(ar: Attribute, _) => below.getOrElse(ar.exprId, unknown).derivation
+          case a: Alias                => Some(a.child.sql)
+          case ar: Attribute           => below.getOrElse(ar.exprId, unknown).derivation
+          case otherNe                 => Some(otherNe.sql)
+        }
+        ne.exprId -> Lin(sources(below, ne.references.toSeq) ++ fromSubqueries, derivation)
+      })
 
-    case p: Project =>
-      resolveNamed(attr, p.projectList, p.child)
+    private def sources(lins: Lins, attrs: Seq[Attribute]): Set[String] =
+      attrs.flatMap(a => lins.getOrElse(a.exprId, unknown).sources).toSet
 
-    case a: Aggregate =>
-      resolveNamed(attr, a.aggregateExpressions, a.child)
-
-    case w: Window =>
-      w.windowExpressions.find(_.toAttribute.exprId == attr.exprId) match {
-        case Some(ne) => resolveRefs(ne, w.child)
-        case None     => resolve(attr, w.child)
+    private def firstById(entries: Seq[(ExprId, Lin)]): Lins =
+      entries.foldLeft(Map.empty[ExprId, Lin]) { case (m, (id, lin)) =>
+        if (m.contains(id)) m else m.updated(id, lin)
       }
-
-    case g: Generate =>
-      if (g.generatorOutput.exists(_.exprId == attr.exprId))
-        g.generator.references.toSeq.flatMap(a => resolve(a, g.child)).toSet
-      else resolve(attr, g.child)
-
-    case u: Union =>
-      val idx = u.output.indexWhere(_.exprId == attr.exprId)
-      if (idx >= 0) u.children.flatMap(c => resolve(c.output(idx), c)).toSet
-      else u.children.flatMap(c => resolve(attr, c)).toSet
-
-    case e: Expand =>
-      // rollup/cube/grouping-sets: each output position is fed by the
-      // same position of every projection row (NULLed out in some — the
-      // union of references is the true source set)
-      val idx = e.output.indexWhere(_.exprId == attr.exprId)
-      if (idx >= 0)
-        e.projections.flatMap(p =>
-          p(idx).references.toSeq.flatMap(a => resolve(a, e.child))).toSet
-      else resolve(attr, e.child)
-
-    case other =>
-      // pass-through nodes (Filter, Join, Sort, SubqueryAlias, Limit, ...):
-      // descend into whichever children can produce the attribute
-      val owning = other.children.filter(_.outputSet.contains(attr))
-      val targets = if (owning.nonEmpty) owning else other.children
-      targets.flatMap(c => resolve(attr, c)).toSet
-  }
-
-  private def resolveNamed(
-      attr: Attribute,
-      exprs: Seq[NamedExpression],
-      child: LogicalPlan): Set[String] =
-    exprs.find(_.toAttribute.exprId == attr.exprId) match {
-      case Some(ne) => resolveRefs(ne, child)
-      case None     => resolve(attr, child)
-    }
-
-  private def resolveRefs(ne: NamedExpression, child: LogicalPlan): Set[String] = {
-    val direct = ne.references.toSeq.flatMap(a => resolve(a, child)).toSet
-    // a column computed FROM a subquery (SELECT (SELECT max(x) FROM t))
-    // derives from the subquery plan's own sources
-    val fromSubqueries = ne.collect {
-      case s: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
-        s.plan.output.flatMap(a => resolve(a, s.plan)).toSet
-    }.flatten.toSet
-    direct ++ fromSubqueries
   }
 }

@@ -175,14 +175,6 @@ object LineageListener {
       }.sortBy(_._1)
     } catch { case _: Throwable => Seq.empty }
 
-  /** Recurring-query identity for the catalog side: sha-256 of the
-    * CANONICALIZED analyzed plan — `canonicalized` normalizes attribute
-    * ids and alias names, so re-running the same job (fresh session,
-    * fresh exprIds) yields the same fingerprint, while any structural
-    * change (different filter, extra column, other table) changes it.
-    * Literal-sensitive by design: a catalog wanting parameterized-job
-    * grouping groups on (inputs, outputs, columnLineage) instead.
-    */
   /** Cap on the recorded query text — a catalog field, not a plan dump.
     * 8 KiB holds any hand-written SQL and the head of a generated plan;
     * a million-record JSONL catalog stays loadable. */
@@ -225,6 +217,14 @@ object LineageListener {
         else redacted.take(QUERY_TEXT_MAX) + " ...[truncated]")
     } catch { case _: Throwable => None }
 
+  /** Recurring-query identity for the catalog side: sha-256 of the
+    * CANONICALIZED analyzed plan — `canonicalized` normalizes attribute
+    * ids and alias names, so re-running the same job (fresh session,
+    * fresh exprIds) yields the same fingerprint, while any structural
+    * change (different filter, extra column, other table) changes it.
+    * Literal-sensitive by design: a catalog wanting parameterized-job
+    * grouping groups on (inputs, outputs, columnLineage) instead.
+    */
   private[lineage] def planFingerprint(
       analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String =
     try {

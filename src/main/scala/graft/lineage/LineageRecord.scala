@@ -80,15 +80,7 @@ final case class LineageRecord(
 
   /** Dependency-free JSON rendering (newline-safe, driver-parsable). */
   def toJson: String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Json.{quote => q}
     def arr(xs: Seq[String]): String = xs.mkString("[", ",", "]")
     def opt(o: Option[String]): String = o.map(q).getOrElse("null")
     def num(o: Option[Long]): String = o.map(_.toString).getOrElse("null")
@@ -116,4 +108,20 @@ final case class LineageRecord(
       s""""peakMemoryBytes":${num(peakMemoryBytes)},"spillBytes":${num(spillBytes)},""" +
       s""""planFingerprint":${q(planFingerprint)},"queryText":${opt(queryText)}}"""
   }
+}
+
+/** The one JSON string encoder of the hand-built JSON this project writes
+  * (records, OpenLineage events, bench and verify output): quotes,
+  * backslash and ALL control chars (<0x20) escaped, so a tab or CR in a
+  * name or SQL text cannot make a strict parser reject the line. */
+private[graft] object Json {
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

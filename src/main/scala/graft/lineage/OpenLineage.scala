@@ -31,15 +31,7 @@ object OpenLineage {
   private def facetUrl(defn: String): String =
     s"https://openlineage.io/spec/facets/1-0-0/$defn.json"
 
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  import Json.{quote => q}
 
   private def obj(fields: Seq[(String, String)]): String =
     fields.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")

@@ -770,7 +770,11 @@ object Dedup {
   /** Process-wide count of [[ccLabelsWithRounds]] executions — the
     * observability hook DedupShareSpec uses to prove the verdict
     * pipeline (shingle → MinHash → banding → iterative CC) runs ONCE
-    * per (session, dir) however many consumers join its output. */
+    * per (session, dir) however many consumers join its output. It
+    * counts EVERY call, not only the verdict memo's trainings:
+    * `q_dedup_clusters` and `q_media_clusters` run [[ccLabels]] afresh
+    * on each execution (over minhash pairs and over the memoized phash
+    * pairs), so any pass that runs either query adds one per run. */
   private[graft] val ccRuns = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** [[ccLabels]] plus the number of rounds it ran (spec hook). */
@@ -898,21 +902,8 @@ object Dedup {
   private val verdictCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
-  /** Fingerprint of the verdict's input files: stable while the data is,
-    * different the moment any part file is rewritten, added or removed.
-    * Metadata-only (no reads) — O(#files) driver work. */
-  private def docsFingerprint(dir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap(walk)
-      else Seq(f)
-    val parts = walk(new java.io.File(dir, "documents.parquet"))
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}").sorted
-    java.util.UUID.nameUUIDFromBytes(parts.mkString("\n").getBytes).toString
-  }
-
   private def verdictShared(s: SparkSession, dir: String): DataFrame = {
-    val fp = docsFingerprint(dir)
+    val fp = Tables.fileFingerprint(dir, "documents")
     val it = verdictCache.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()

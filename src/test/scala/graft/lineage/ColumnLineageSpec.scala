@@ -144,5 +144,74 @@ class ColumnLineageSpec extends AnyFunSpec with SparkTestBase {
       assert(lin("dbl").forall(_.contains("orders.parquet")))
       assert(lin("o_orderkey").map(_.split('.').last) == Set("o_orderkey"))
     }
+
+    it("merges a self-union with a permuted branch position by position") {
+      // the shape `df.union(df.select(<permuted columns>))`, stacked twice:
+      // each output position reads its own column and the permuted one, and
+      // the shared subtree under both branches is resolved once per level
+      val names = IndexedSeq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+      val perms = Seq(IndexedSeq(2, 0, 3, 1), IndexedSeq(1, 3, 0, 2))
+      var df = li.select(names.map(col): _*)
+      var expected = names.map(n => Set(n))
+      perms.foreach { perm =>
+        df = df.union(df.select(perm.indices.map(i => col(names(perm(i))).as(names(i))): _*))
+        expected = perm.indices.map(i => expected(i) ++ expected(perm(i)))
+      }
+      val byOut = ColumnLineage.forPlan(df.queryExecution.analyzed).map(m => m.output -> m).toMap
+      names.indices.foreach { i =>
+        assert(byOut(names(i)).sources.map(_.split('.').last).toSet == expected(i), names(i))
+        assert(byOut(names(i)).sources.forall(_.contains("lineitem.parquet")))
+        assert(byOut(names(i)).expression.isEmpty, "identity reads and renames only")
+      }
+    }
+
+    it("takes a union's derivation from its first branch that computes one") {
+      def derivation(df: DataFrame) =
+        ColumnLineage.forPlan(df.queryExecution.analyzed).map(m => m.output -> m.expression).toMap
+      val read = li.select(col("l_orderkey").as("k"))
+      val plusOne = ord.select((col("o_orderkey") + 1).as("k"))
+      val twice = li.select((col("l_orderkey") * 2).as("k"))
+      assert(derivation(read.union(plusOne))("k") == Some("(o_orderkey + CAST(1 AS BIGINT))"))
+      assert(derivation(plusOne.union(read))("k") == Some("(o_orderkey + CAST(1 AS BIGINT))"))
+      assert(derivation(twice.union(plusOne))("k") == Some("(l_orderkey * CAST(2 AS BIGINT))"))
+      assert(derivation(read.union(read))("k").isEmpty)
+    }
+
+    it("resolves a deep stack of a + b layers to the transitive source sets") {
+      val base = IndexedSeq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+        "l_quantity", "l_extendedprice", "l_discount", "l_tax")
+      val rnd = new scala.util.Random(7)
+      var df = li.select(base.map(col): _*)
+      var names = base
+      var expected = base.map(n => Set(n))
+      (1 to 10).foreach { level =>
+        val refs = IndexedSeq.fill(base.size)((rnd.nextInt(base.size), rnd.nextInt(base.size)))
+        df = df.select(refs.zipWithIndex.map { case ((a, b), i) =>
+          (col(names(a)) + col(names(b))).as(s"x${level}_$i") }: _*)
+        names = refs.indices.map(i => s"x${level}_$i")
+        expected = refs.map { case (a, b) => expected(a) ++ expected(b) }
+      }
+      val lin = lineage(df)
+      assert(lin.keySet == names.toSet)
+      names.indices.foreach { i =>
+        assert(lin(names(i)).map(_.split('.').last) == expected(i), names(i))
+      }
+      assert(expected.exists(_.size > 2), "the wiring should mix columns")
+    }
+
+    it("reports the derivation SQL of window and explode outputs") {
+      val w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
+      val win = ColumnLineage.forPlan(ord.select(col("o_orderkey"),
+          row_number().over(w).as("rn")).withColumnRenamed("rn", "rank").queryExecution.analyzed)
+        .map(m => m.output -> m.expression).toMap
+      assert(win("rank") == Some("row_number() OVER (PARTITION BY o_orderpriority " +
+        "ORDER BY o_totalprice ASC NULLS FIRST ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"))
+      assert(win("o_orderkey").isEmpty)
+      val gen = ColumnLineage.forPlan(docs.select(col("doc_id"),
+          explode(split(col("text"), " ")).as("word")).queryExecution.analyzed)
+        .map(m => m.output -> m.expression).toMap
+      assert(gen("word") == Some("explode(split(text, ' ', -1))"))
+      assert(gen("doc_id").isEmpty)
+    }
   }
 }
